@@ -10,12 +10,11 @@ LogStore (the commit protocol needs only atomic put-if-absent — POSIX
 link(2) default, object-store conditional PUT), and vacuum.
 
 Round 4 left the engine with three separately crash-tested commit
-protocols — the compaction manifest (``operators/compaction.py``),
-the upsert generation pointer + commit log
-(``streaming/upsert_sink.py``), and additive schema evolution
-(``operators/evolution.py``).  A real 100 TB lakehouse runs all of
-those against one log with snapshot isolation; this module is that
-unification (the mini-Delta the other three docstrings point at).
+protocols — a compaction manifest, an upsert generation pointer +
+commit log, and additive schema evolution over parquet footers.  A
+real 100 TB lakehouse runs all of those against one log with
+snapshot isolation; this module is that unification, and the three
+superseded protocols have since been deleted.
 The reference has nothing comparable — its "table" is a directory of
 NDJSON/parquet it rewrites wholesale (``toy_glue.py:58-65``); every
 semantic here is greenfield scale engineering.
@@ -66,10 +65,9 @@ Data files never need that primitive — they publish invisibly and the
 commit file is the only publication point — so Spark's own
 HDFS/S3A-capable filesystem layer carries them unchanged.
 
-Cites: replaces the per-operator protocols of ``compaction.py:128-165``,
-``upsert_sink.py:131-145``, ``evolution.py:50-66`` (all kept — their
-crash-injection suites also run against this log, see
-``tests/test_txtable.py``).
+Their crash-injection and evolution suites now run against this log
+(``tests/test_txtable.py``, ``tests/test_compaction.py``,
+``tests/test_evolution.py``, ``tests/test_upsert.py``).
 """
 
 from __future__ import annotations
@@ -82,6 +80,7 @@ import uuid
 from collections.abc import Sequence
 from collections import OrderedDict as _OrderedDict
 from dataclasses import dataclass
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -484,7 +483,13 @@ def _fold_state_memo(path: str, version: int) -> _State | None:
     of a deleted-and-recreated table misses instead of serving wrong
     prior state.  True LRU (hits move to the back of the eviction
     order) and lock-guarded — the streaming feed reader and a
-    concurrent batch reader may share the driver process."""
+    concurrent batch reader may share the driver process.
+
+    Every caller shares the cached object, so its maps are read-only
+    ``MappingProxyType`` views (ADVICE r13): an in-place write raises
+    ``TypeError`` instead of corrupting the next reader's state.  A
+    caller that needs to edit copies first (``dict(state.properties)``).
+    The views cost nothing per hit — no dict is copied."""
     ident = _version_identity(path, version)
     key = (path, version, ident)
     with _FOLD_MEMO_LOCK:
@@ -493,6 +498,9 @@ def _fold_state_memo(path: str, version: int) -> _State | None:
             _FOLD_MEMO.move_to_end(key)
             return hit
     state = _fold_state_uncached(path, version)
+    if state is not None:
+        for name in ("files", "dvs", "properties", "stream_txns", "protocol"):
+            setattr(state, name, MappingProxyType(getattr(state, name)))
     with _FOLD_MEMO_LOCK:
         while len(_FOLD_MEMO) >= 256:
             _FOLD_MEMO.popitem(last=False)
@@ -1333,9 +1341,9 @@ def write_checkpoint(path: str, version: int | None = None) -> int | None:
     scalars = {
         "version": state.version,
         "schema": state.schema,
-        "stream_txns": state.stream_txns,
-        "properties": state.properties,
-        "protocol": state.protocol,
+        "stream_txns": dict(state.stream_txns),
+        "properties": dict(state.properties),
+        "protocol": dict(state.protocol),
         "txn": uuid.uuid4().hex,
     }
     if "parquet-checkpoint" in (
@@ -1401,8 +1409,8 @@ def write_checkpoint(path: str, version: int | None = None) -> int | None:
     else:
         # legacy inline format for pre-protocol tables (their readers
         # were never gated on the columnar feature)
-        scalars["files"] = state.files
-        scalars["dvs"] = state.dvs
+        scalars["files"] = dict(state.files)
+        scalars["dvs"] = dict(state.dvs)
     body = json.dumps(scalars, indent=0).encode()
     # losing the put race is fine: a racing writer checkpointed the
     # same immutable prefix
@@ -2404,10 +2412,9 @@ def _phys_clause_col(pm: dict, col: str) -> str:
 
 
 def _check_evolution(existing_schema: str, df: DataFrame) -> DataFrame:
-    """Additive-evolution contract (``operators/evolution.py``
-    semantics, enforced against the LOG schema instead of parquet
-    footers): new nullable columns allowed, missing columns
-    null-filled, type changes refused loudly."""
+    """Additive-evolution contract, enforced against the LOG schema:
+    new nullable columns allowed, missing columns null-filled, type
+    changes refused loudly."""
     from pyspark.sql.types import StructType
 
     existing = StructType.fromJson(json.loads(existing_schema))
@@ -3148,9 +3155,8 @@ def tx_compact(
     if there was nothing worth compacting.  Commutes with concurrent
     appends (validation only aborts if a victim was concurrently
     removed).  With ``order_col`` the rewrite range-partitions + sorts
-    on that column (``operators/compaction.py`` semantics), so a
-    sorted/Z-ordered table KEEPS its clustering and footer min/max
-    stats stay selective.  When ``order_col`` is omitted, the table's
+    on that column, so a sorted/Z-ordered table KEEPS its clustering
+    and footer min/max stats stay selective.  When ``order_col`` is omitted, the table's
     declared properties govern: ``cluster_by``, else the raw column of
     the ``partition_by`` transform — so compacting a table that
     promised ``day(ts)`` pruning re-clusters on ``ts`` and the derived
@@ -4072,10 +4078,8 @@ def tx_upsert_stream(
     available_now: bool = True,
     merge_on_read: bool = False,
 ):
-    """Streaming MERGE sink committing through the unified log — the
-    ``streaming/upsert_sink.py`` semantics (newest per key, changes
-    win ties) with the generation-pointer protocol replaced by this
-    module's commit log, and REPLAY made exactly-once by the
+    """Streaming MERGE sink committing through the unified log — newest
+    per key, changes win ties — with REPLAY made exactly-once by the
     ``(app_id, batch_id)`` token recorded in each commit: a restarted
     query that re-delivers batch N finds N already in the log and
     skips it, so the version history stays one-commit-per-batch
@@ -4680,12 +4684,10 @@ def commit_change_rows(
     :func:`tx_change_feed` (full snapshot diff) scales up to — the same
     removed+added-files contract Delta's change-data-feed reads.
 
-    Pure Python (pyarrow + pandas, no SparkSession): callable from a
-    ``SimpleDataSourceStreamReader`` (``sources/txfeed.py``), which
-    runs driver-side outside any Spark job.  Per-commit deltas are
-    bounded by the write size, so a driver-side read matches the
-    Simple-reader API's own prefetch contract; a giant backfill commit
-    would use the partition-planning reader instead.
+    Pure Python (pyarrow + pandas, no SparkSession): callable inside an
+    executor task — the ``tx_change_feed`` stream reader
+    (``sources/txfeed.py``) runs it once per commit, one task each — or
+    on the driver.  Per-commit deltas are bounded by the write size.
 
     Returns tuples ``(*keys, *content, change_type, version)`` with
     change_type in insert/update/delete; delete rows carry the OLD

@@ -32,8 +32,8 @@ The reference has none of these (432-line pipeline with hard-coded
 paths); semantics follow public Hive-metastore / Delta Lake / SQL
 conventions.  Item 3 (the executor-parallel backfill delta path) has
 no entry of its own — it is a cost-path inside every matview refresh,
-pinned by tests/test_matview_dist_delta.py and measured by
-tools/matview_dist_probe.py (docs/MATVIEW_DIST_PROBE_r11.json).
+pinned by tests/test_matview_dist_delta.py; its measurement is
+written up in docs/PLANS.md and docs/MATVIEW_DIST_PROBE_r11.json.
 """
 
 from __future__ import annotations

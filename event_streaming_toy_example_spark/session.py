@@ -85,8 +85,8 @@ def get_spark(
         # read path hands Spark one path per live data file): above
         # this threshold Spark schedules a DISTRIBUTED listing job with
         # one task per path — measured 190 ms at 34 paths, 0.9 s at
-        # 340, 7.6 s at 3400 on local[32] (round-9 A/B,
-        # tools/follower_ab_probe.py), because each task costs far more
+        # 340, 7.6 s at 3400 on local[32] (round-9 A/B, docs/PLANS.md
+        # "The follower regression, closed"), because each task costs far more
         # than the getFileStatus it wraps.  Driver-side threadpool
         # listing handles the same counts in 107/166/728 ms (~10x).
         # The Spark default (32) is tuned for S3 listing of DIRECTORY

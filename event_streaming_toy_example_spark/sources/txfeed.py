@@ -7,8 +7,7 @@ versions" by diffing two snapshot reads; a downstream consumer that
 maintains itself continuously needs the INCREMENTAL form — an
 offset-tracked stream whose unit of progress is the log version, so a
 restarted query resumes from its checkpointed version and replays any
-committed range deterministically (the ``readBetweenOffsets`` contract,
-same pattern as ``sources/pysource.py``'s sensor stream).
+committed range deterministically.
 
 Row production is :func:`txtable.commit_change_rows`: per commit,
 O(commit delta) — an append reads only its added files, a MERGE/DELETE
@@ -16,15 +15,12 @@ reads its removed+added files and diffs by key (exactly the
 removed+added-files contract Delta's change feed reads).  Nothing ever
 re-scans the table.
 
-Two reader forms, one offset design (contiguous log versions):
-
-- ``tx_change_feed`` — ``SimpleDataSourceStreamReader``: rows prefetch
-  driver-side, at most ``maxVersionsPerBatch`` commits per micro-batch.
-  Right for steady per-commit deltas (bounded by write size).
-- ``tx_change_feed_dist`` — partitioned ``DataSourceStreamReader``
-  (round 6): one EXECUTOR task per commit in the batch range, so a
-  backfill burst of N commits fans out N-wide and delta bytes never
-  pass through the driver.  Right for catch-up and backfill.
+``tx_change_feed`` is the one feed format: a partitioned
+``DataSourceStreamReader`` with one EXECUTOR task per commit in the
+batch range, so a backfill burst of N commits fans out N-wide and
+delta bytes never pass through the driver.  Its offset mechanism,
+:class:`TxLogStreamReader`, is shared with the table's append stream
+(``sources/txsource.py``).
 
 The reference has no table maintenance at all (its "table" is a
 directory rewritten wholesale, ``toy_glue.py:58-65``); this surface is
@@ -37,14 +33,13 @@ import json
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceStreamReader,
+    InputPartition,
+)
 
 from event_streaming_toy_example_spark.operators import txtable as tx
-
-try:
-    from pyspark.sql.datasource import SimpleDataSourceStreamReader
-except ImportError:  # pragma: no cover - older runtime
-    SimpleDataSourceStreamReader = None  # type: ignore[assignment]
 
 
 def _resolve_start(table_path: str, options: dict) -> int:
@@ -164,77 +159,76 @@ def tx_change_rows_dist(
     )
 
 
-if SimpleDataSourceStreamReader is not None:
+class TxLogStreamReader(DataSourceStreamReader):
+    """The ONE offset mechanism for streams over a table's commit log.
 
-    class TxFeedStreamReader(SimpleDataSourceStreamReader):
-        """Offset = ``{"version": v}`` (all changes up to and including
-        log version v have been delivered).  ``read`` advances by at
-        most ``maxversionsperbatch`` commits per micro-batch;
-        ``readBetweenOffsets`` replays any committed version range
-        bit-identically — commits are immutable, so replay determinism
-        is free."""
+    Offset = ``{"version": v}``: every commit up to and including log
+    version v has been delivered.  Commits are immutable, so the rows
+    of a version range are a pure function of the log and a restarted
+    query re-plans a batch bit-identically.  Subclasses supply only
+    :meth:`_version_partitions` (the tasks one commit needs) and
+    ``read``; everything offset-shaped lives here:
 
-        def __init__(self, options: dict) -> None:
-            self.path = options["path"]
-            self.keys = options["keys"].split(",")
-            self.content = options["contentcols"].split(",")
-            self.start = _resolve_start(self.path, options)
-            self.per_batch = int(options.get("maxversionsperbatch", "1"))
+    - ``initialOffset`` is the resolved ``fromVersion`` /
+      ``fromTimestamp`` (:func:`_resolve_start`);
+    - ``latestOffset`` SELF-caps at ``maxVersionsPerBatch`` commits
+      past the highest offset seen (0 = unbounded) — the method gets
+      no batch start, so the reader keeps that base itself.  A
+      month-long backfill becomes ceil(commits/cap) retryable
+      micro-batches instead of one giant batch whose failure re-runs
+      everything;
+    - ``partitions`` never re-plans a version at or below the highest
+      one already planned by this instance, and an empty range plans
+      no partitions (the API's empty-range contract).
 
-        def initialOffset(self) -> dict:
-            return {"version": self.start}
+    WHY capping from the highest-seen offset is restart-safe (engine
+    call order pinned empirically in ``tests/test_advice_r8.py``): a
+    RESTARTED query's first engine call is never ``latestOffset`` —
+    the microbatch engine first RECONSTRUCTS the checkpointed batch
+    with ``partitions(committed, committed)`` (the recovery re-plan),
+    which advances the cap's base to the checkpointed offset, so
+    ``latestOffset`` can never return an offset below one the engine
+    recorded.  A fresh query calls ``latestOffset`` before
+    ``initialOffset``; the base then starts at the resolved start.
+    Offsets are durable in the query checkpoint, so ``commit`` has
+    nothing to release."""
 
-        def _rows(self, lo: int, hi: int) -> list[tuple]:
-            rows: list[tuple] = []
-            for v in range(lo + 1, hi + 1):
-                rows.extend(
-                    tx.commit_change_rows(self.path, v, self.keys, self.content)
-                )
-            return rows
+    def __init__(self, path: str, options: dict) -> None:
+        self.path = path
+        self.start_version = _resolve_start(path, options)
+        self.per_batch = int(options.get("maxversionsperbatch", "0"))
+        #: highest offset this instance has returned or seen (cap base)
+        self._hwm = self.start_version
+        #: highest version already PLANNED for delivery
+        self._floor = self.start_version
 
-        def read(self, start: dict):
-            s = int(start["version"])
-            current = tx.table_version(self.path)
-            if current <= s:
-                return iter([]), start
-            e = min(s + self.per_batch, current)
-            return self._rows(s, e), {"version": e}
+    def initialOffset(self) -> dict:
+        return {"version": self.start_version}
 
-        def readBetweenOffsets(self, start: dict, end: dict):
-            return self._rows(int(start["version"]), int(end["version"]))
+    def latestOffset(self) -> dict:
+        cur = tx.table_version(self.path)
+        if self.per_batch > 0:
+            cur = min(cur, self._hwm + self.per_batch)
+        end = max(cur, self._hwm)
+        self._hwm = end
+        return {"version": end}
 
-    class TxFeedDataSource(DataSource):
-        """``spark.readStream.format("tx_change_feed")`` — options:
-        ``path`` (table root), ``keys`` (comma-separated key columns),
-        ``contentCols`` (comma-separated content columns),
-        ``fromVersion`` (deliver changes AFTER this version; default 0
-        = since table creation), ``maxVersionsPerBatch``."""
+    def partitions(self, start: dict, end: dict) -> list:
+        s, e = int(start["version"]), int(end["version"])
+        # start/end come from the engine's offset log: the recovery
+        # re-plan lands here first on restart, giving the cap its base
+        self._hwm = max(self._hwm, s, e)
+        lo = max(s, self._floor)
+        self._floor = max(self._floor, e)
+        return [
+            p for v in range(lo + 1, e + 1) for p in self._version_partitions(v)
+        ]
 
-        @classmethod
-        def name(cls) -> str:
-            return "tx_change_feed"
+    def _version_partitions(self, version: int) -> list:
+        raise NotImplementedError
 
-        def schema(self):
-            return _feed_schema(
-                self.options["path"],
-                self.options["keys"].split(","),
-                self.options["contentcols"].split(","),
-            )
-
-        def simpleStreamReader(self, schema) -> "TxFeedStreamReader":
-            return TxFeedStreamReader(self.options)
-
-
-# ------------------------------------ distributed (partitioned) form
-
-try:
-    from pyspark.sql.datasource import (
-        DataSourceStreamReader,
-        InputPartition,
-    )
-except ImportError:  # pragma: no cover - older runtime
-    DataSourceStreamReader = None  # type: ignore[assignment]
-    InputPartition = object  # type: ignore[assignment]
+    def commit(self, end: dict) -> None:
+        pass  # offsets are durable in the query checkpoint
 
 
 class _FeedPartition(InputPartition):
@@ -245,149 +239,60 @@ class _FeedPartition(InputPartition):
         self.content = list(content)
 
 
-if DataSourceStreamReader is not None:
+class TxFeedStreamReader(TxLogStreamReader):
+    """The change feed: one EXECUTOR task per commit in the batch's
+    version range, so a backfill burst of N commits fans out N-wide
+    and the delta bytes never pass through the driver.  Requires the
+    table path to be visible to executors (true for any shared-storage
+    deployment; trivially true on local[n]); the log reads go through
+    the table's :class:`~..operators.logstore.LogStore`, so the same
+    reader works against an object-store-backed log."""
 
-    class TxFeedPartitionedStreamReader(DataSourceStreamReader):
-        """The SCALE form of the feed (the Simple reader's documented
-        promotion path): same offset design — ``{"version": v}`` over
-        the immutable commit log — but row production happens on
-        EXECUTORS, one task per commit in the batch's version range,
-        so a backfill burst of N commits fans out N-wide instead of
-        serializing through the driver, and the delta bytes never pass
-        through the driver at all.  Requires the table path to be
-        visible to executors (true for any shared-storage deployment;
-        trivially true on local[n]); the log reads go through the
-        table's :class:`~..operators.logstore.LogStore`, so the same
-        reader works against an object-store-backed log.  Replay determinism is free:
-        ``partitions(start, end)`` is a pure function of the immutable
-        log, so a restarted query re-plans the identical batch."""
+    def __init__(self, options: dict) -> None:
+        super().__init__(options["path"], options)
+        self.keys = options["keys"].split(",")
+        self.content = options["contentcols"].split(",")
 
-        def __init__(self, options: dict) -> None:
-            self.path = options["path"]
-            self.keys = options["keys"].split(",")
-            self.content = options["contentcols"].split(",")
-            self.start_version = _resolve_start(self.path, options)
-            #: admission control (0 = unbounded): ``latestOffset`` has
-            #: no argument to learn the batch start from, so the reader
-            #: SELF-caps — a month-long backfill becomes
-            #: ceil(commits/cap) retryable micro-batches instead of one
-            #: giant batch whose failure re-runs everything
-            self.per_batch = int(options.get("maxversionsperbatch", "0"))
-            #: Highest offset this instance has returned or seen — the
-            #: cap's base.  WHY capping from it is restart-safe
-            #: (ADVICE r7 investigated, engine call order pinned
-            #: empirically in ``tests/test_txfeed.py``): a RESTARTED
-            #: query's first engine call is never latestOffset — the
-            #: microbatch engine first RECONSTRUCTS the checkpointed
-            #: batch with ``partitions(committed, committed)`` (the
-            #: recovery re-plan), which advances this base to the
-            #: checkpointed offset before any cap computes, so
-            #: latestOffset can never return an offset below one the
-            #: engine recorded.  (A fresh query calls latestOffset
-            #: before initialOffset, so "uncapped until the base is
-            #: known" would deliver the whole backfill in one batch —
-            #: the exact failure admission control exists to prevent;
-            #: the double-restart e2e test pins no-redelivery.)
-            self._hwm = self.start_version
-            #: highest version already PLANNED for delivery by this
-            #: instance — partitions() never re-plans at or below it
-            self._floor = self.start_version
+    def _version_partitions(self, version: int) -> list:
+        return [_FeedPartition(self.path, version, self.keys, self.content)]
 
-        def initialOffset(self) -> dict:
-            return {"version": self.start_version}
-
-        def latestOffset(self) -> dict:
-            cur = tx.table_version(self.path)
-            if self.per_batch > 0:
-                cur = min(cur, self._hwm + self.per_batch)
-            end = max(cur, self._hwm)
-            self._hwm = end
-            return {"version": end}
-
-        def partitions(self, start: dict, end: dict):
-            s, e = int(start["version"]), int(end["version"])
-            # ``start``/``end`` come from the engine's offset log: the
-            # recovery re-plan lands here first on restart, giving the
-            # cap its true base
-            self._hwm = max(self._hwm, s, e)
-            lo = max(s, self._floor)
-            self._floor = max(self._floor, lo, e)
-            return [
-                _FeedPartition(self.path, v, self.keys, self.content)
-                for v in range(lo + 1, e + 1)
-            ]
-
-        def read(self, partition: _FeedPartition):
-            # executor-side: reads ONLY this commit's delta files
-            return iter(
-                tx.commit_change_rows(
-                    partition.path,
-                    partition.version,
-                    partition.keys,
-                    partition.content,
-                )
+    def read(self, partition: _FeedPartition):
+        # executor-side: reads ONLY this commit's delta files
+        return iter(
+            tx.commit_change_rows(
+                partition.path,
+                partition.version,
+                partition.keys,
+                partition.content,
             )
-
-        def commit(self, end: dict) -> None:
-            pass  # offsets are durable in the query checkpoint
-
-    class TxFeedDistDataSource(DataSource):
-        """``spark.readStream.format("tx_change_feed_dist")`` — the
-        executor-parallel twin of ``tx_change_feed``; same options."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "tx_change_feed_dist"
-
-        def schema(self):
-            return _feed_schema(
-                self.options["path"],
-                self.options["keys"].split(","),
-                self.options["contentcols"].split(","),
-            )
-
-        def streamReader(self, schema) -> "TxFeedPartitionedStreamReader":
-            return TxFeedPartitionedStreamReader(self.options)
-
-
-def register_tx_feed_dist_source(spark: SparkSession) -> None:
-    """Idempotent registration of the partitioned feed format."""
-    if DataSourceStreamReader is None:  # pragma: no cover
-        raise NotImplementedError(
-            "pyspark.sql.datasource.DataSourceStreamReader unavailable "
-            "in this runtime"
         )
-    spark.dataSource.register(TxFeedDistDataSource)
 
 
-def read_change_feed_stream_dist(
-    spark: SparkSession,
-    table_path: str,
-    keys: Sequence[str],
-    content_cols: Sequence[str],
-    from_version: int = 0,
-    max_versions_per_batch: int = 0,
-) -> DataFrame:
-    register_tx_feed_dist_source(spark)
-    return (
-        spark.readStream.format("tx_change_feed_dist")
-        .option("path", table_path)
-        .option("keys", ",".join(keys))
-        .option("contentCols", ",".join(content_cols))
-        .option("fromVersion", str(from_version))
-        .option("maxVersionsPerBatch", str(max_versions_per_batch))
-        .load()
-    )
+class TxFeedDataSource(DataSource):
+    """``spark.readStream.format("tx_change_feed")`` — options:
+    ``path`` (table root), ``keys`` (comma-separated key columns),
+    ``contentCols`` (comma-separated content columns), ``fromVersion``
+    (deliver changes AFTER this version; default 0 = since table
+    creation) or ``fromTimestamp``, ``maxVersionsPerBatch`` (0 or
+    absent = unbounded)."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "tx_change_feed"
+
+    def schema(self):
+        return _feed_schema(
+            self.options["path"],
+            self.options["keys"].split(","),
+            self.options["contentcols"].split(","),
+        )
+
+    def streamReader(self, schema) -> TxFeedStreamReader:
+        return TxFeedStreamReader(self.options)
 
 
 def register_tx_feed_source(spark: SparkSession) -> None:
-    """Idempotent registration; raises a named error if the runtime
-    lacks the streaming half of the Python DataSource API."""
-    if SimpleDataSourceStreamReader is None:  # pragma: no cover
-        raise NotImplementedError(
-            "pyspark.sql.datasource.SimpleDataSourceStreamReader "
-            "unavailable in this runtime"
-        )
+    """Idempotent registration of the ``tx_change_feed`` format."""
     spark.dataSource.register(TxFeedDataSource)
 
 
@@ -465,10 +370,8 @@ def follow_table(
 
     BLOCKING: drives the query with ``processAllAvailable`` until the
     feed has delivered every commit available at call time, then stops
-    it (the Simple stream-reader's catch-up idiom — ``availableNow``
-    would bind "available" to the first prefetched offset range).  A
-    production deployment starts the same query with a processing-time
-    trigger and never stops.
+    it.  A production deployment starts the same query with a
+    processing-time trigger and never stops.
     """
     import time as _time
     from pyspark.sql import functions as F

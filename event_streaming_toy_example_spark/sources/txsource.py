@@ -70,6 +70,9 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from event_streaming_toy_example_spark.operators import txtable as tx
+from event_streaming_toy_example_spark.sources.txfeed import TxLogStreamReader
+
 _OPS = {
     EqualTo: "=",
     GreaterThan: ">",
@@ -112,10 +115,6 @@ class TxTableReader(DataSourceReader):
             int(options["version"]) if options.get("version") else None
         )
         if options.get("as_of"):
-            from event_streaming_toy_example_spark.operators import (
-                txtable as tx,
-            )
-
             if self.version is not None:
                 raise ValueError("txtable source: pass version OR as_of")
             self.version = tx.version_as_of(
@@ -124,10 +123,6 @@ class TxTableReader(DataSourceReader):
         self.clauses: list[tuple] = []
         self.pushdown = str(options.get("pushdown", "")).lower() == "true"
         if schema is None:
-            from event_streaming_toy_example_spark.operators import (
-                txtable as tx,
-            )
-
             snap = tx.snapshot(self.path, self.version)
             schema = (
                 StructType.fromJson(json.loads(snap.schema))
@@ -188,8 +183,6 @@ class TxTableReader(DataSourceReader):
                 yield f
 
     def partitions(self) -> Sequence[InputPartition]:
-        from event_streaming_toy_example_spark.operators import txtable as tx
-
         clauses = self.clauses
         snap = tx.snapshot(self.path, self.version)
         if snap is None:
@@ -227,8 +220,6 @@ def _read_file_partition(partition: _FilePartition) -> Iterator:
 
     if not partition.name:
         return
-    from event_streaming_toy_example_spark.operators import txtable as tx
-
     target = StructType.fromJson(json.loads(partition.schema_json))
     full = os.path.join(partition.table, partition.name)
     t = pq.read_table(full)
@@ -304,12 +295,6 @@ def _read_file_partition(partition: _FilePartition) -> Iterator:
         yield batch
 
 
-try:
-    from pyspark.sql.datasource import DataSourceStreamReader
-except ImportError:  # pragma: no cover - older runtime
-    DataSourceStreamReader = None  # type: ignore[assignment]
-
-
 def _parse_where_option(raw: str | None) -> list[tuple]:
     """The streaming source's clause pushdown rides an OPTION (Spark
     4.1's Python STREAMING DataSource API has no planner ``pushFilters``
@@ -334,158 +319,104 @@ def _parse_where_option(raw: str | None) -> list[tuple]:
     return out
 
 
-if DataSourceStreamReader is not None:
+class TxTableStreamReader(TxLogStreamReader):
+    """``spark.readStream.format("txtable")`` — the table's APPEND
+    STREAM: offset = committed log version (``sources/txfeed.py``'s
+    contract over the immutable log), each micro-batch's work =
+    ONE EXECUTOR TASK PER DATA FILE the batch's commits added (the
+    batch reader's partition-per-file shape), each task the same
+    resolved pyarrow read (column-mapping projection onto the
+    stream's schema, null-filled pre-evolution columns, option
+    clauses stats/bloom-pruned at planning and re-applied
+    row-exactly).
 
-    class TxTableStreamReader(DataSourceStreamReader):
-        """``spark.readStream.format("txtable")`` — the table's APPEND
-        STREAM: offset = committed log version (``sources/txfeed.py``'s
-        contract over the immutable log), each micro-batch's work =
-        ONE EXECUTOR TASK PER DATA FILE the batch's commits added (the
-        batch reader's partition-per-file shape), each task the same
-        resolved pyarrow read (column-mapping projection onto the
-        stream's schema, null-filled pre-evolution columns, option
-        clauses stats/bloom-pruned at planning and re-applied
-        row-exactly).
+    Commit semantics follow Delta's streaming source: APPEND
+    commits stream their added files; a commit that REMOVED files
+    (delete/update/merge rewrites) raises BY NAME unless
+    ``skipChangeCommits=true`` (skip it entirely) or
+    ``ignoreChanges=true`` (stream its added files — rewritten
+    rows re-deliver, Delta's documented caveat); compaction and
+    z-order rewrites are content-invariant by contract and always
+    skip.  Files stream DV-free: a deletion vector attaches only
+    in LATER commits, and at its add commit a file's rows are
+    exactly the appended rows.
 
-        Commit semantics follow Delta's streaming source: APPEND
-        commits stream their added files; a commit that REMOVED files
-        (delete/update/merge rewrites) raises BY NAME unless
-        ``skipChangeCommits=true`` (skip it entirely) or
-        ``ignoreChanges=true`` (stream its added files — rewritten
-        rows re-deliver, Delta's documented caveat); compaction and
-        z-order rewrites are content-invariant by contract and always
-        skip.  Files stream DV-free: a deletion vector attaches only
-        in LATER commits, and at its add commit a file's rows are
-        exactly the appended rows.
+    Offsets, the ``maxVersionsPerBatch`` cap and restart exactly-once
+    are :class:`~.txfeed.TxLogStreamReader`'s, shared with the change
+    feed."""
 
-        Restart exactly-once: offsets live in the query checkpoint;
-        the engine's recovery re-plan (``partitions(committed,
-        committed)``) advances the admission-control base before any
-        ``latestOffset`` cap computes — the same order
-        ``TxFeedPartitionedStreamReader`` pins in
-        ``tests/test_txfeed.py``."""
-
-        def __init__(self, options: dict) -> None:
-            from event_streaming_toy_example_spark.operators import (
-                txtable as tx,
+    def __init__(self, options: dict) -> None:
+        path = options.get("path")
+        if not path:
+            raise ValueError(
+                "txtable stream: option 'path' (the table root) is "
+                "required"
             )
-            from event_streaming_toy_example_spark.sources.txfeed import (
-                _resolve_start,
+        super().__init__(os.path.abspath(path), options)
+        self.clauses = _parse_where_option(options.get("where"))
+        self.skip_change = (
+            str(options.get("skipchangecommits", "")).lower() == "true"
+        )
+        self.ignore_changes = (
+            str(options.get("ignorechanges", "")).lower() == "true"
+        )
+        snap = tx.snapshot(self.path)
+        if snap is None:
+            raise ValueError(
+                f"txtable stream on a table with no commits: {path}"
             )
+        self._schema_json = snap.schema
 
-            path = options.get("path")
-            if not path:
+    def _commit_adds(self, version: int) -> list[str]:
+        c = tx._read_commit(self.path, version)
+        if c.action == "compact":
+            return []  # content-invariant by contract
+        # a commit CHANGES existing rows if it removed files OR
+        # attached deletion vectors (merge-on-read deletes/updates
+        # commit with remove=[] and dv set; a clone's first commit
+        # carries inherited DVs the same way) — both shapes an
+        # append stream cannot represent
+        if c.remove or c.dv:
+            if self.skip_change:
+                return []
+            if not self.ignore_changes:
                 raise ValueError(
-                    "txtable stream: option 'path' (the table root) is "
-                    "required"
+                    f"txtable stream: commit {version} at "
+                    f"{self.path} is a data CHANGE ({c.action}: "
+                    f"{len(c.remove)} file(s) removed, "
+                    f"{len(c.dv or {})} deletion vector(s)); an "
+                    "append stream cannot represent it — pass "
+                    "skipChangeCommits=true to skip such commits, "
+                    "or ignoreChanges=true to stream their added "
+                    "files (rewritten rows re-deliver; DV'd-out "
+                    "rows re-deliver undeleted)"
                 )
-            self.path = os.path.abspath(path)
-            self.start = _resolve_start(self.path, options)
-            self.per_batch = int(options.get("maxversionsperbatch", "0"))
-            self.clauses = _parse_where_option(options.get("where"))
-            self.skip_change = (
-                str(options.get("skipchangecommits", "")).lower() == "true"
-            )
-            self.ignore_changes = (
-                str(options.get("ignorechanges", "")).lower() == "true"
-            )
-            snap = tx.snapshot(self.path)
-            if snap is None:
-                raise ValueError(
-                    f"txtable stream on a table with no commits: {path}"
+        if not self.clauses:
+            return list(c.add)
+        pm = tx._phys_map(self._schema_json)
+        pw = [
+            (tx._phys_clause_col(pm, col), op, v)
+            for col, op, v in self.clauses
+        ]
+        return [
+            f
+            for f in c.add
+            if all(
+                tx._clause_may_match(
+                    (c.stats or {}).get(f), col, op, v
                 )
-            self._schema_json = snap.schema
-            self._hwm = self.start
-            self._floor = self.start
-
-        def initialOffset(self) -> dict:
-            return {"version": self.start}
-
-        def latestOffset(self) -> dict:
-            from event_streaming_toy_example_spark.operators import (
-                txtable as tx,
+                for col, op, v in pw
             )
+        ]
 
-            cur = tx.table_version(self.path)
-            if self.per_batch > 0:
-                cur = min(cur, self._hwm + self.per_batch)
-            end = max(cur, self._hwm)
-            self._hwm = end
-            return {"version": end}
+    def _version_partitions(self, version: int) -> list:
+        return [
+            _FilePartition(self.path, f, None, self._schema_json, self.clauses)
+            for f in self._commit_adds(version)
+        ]
 
-        def _commit_adds(self, version: int) -> list[str]:
-            from event_streaming_toy_example_spark.operators import (
-                txtable as tx,
-            )
-
-            c = tx._read_commit(self.path, version)
-            if c.action == "compact":
-                return []  # content-invariant by contract
-            # a commit CHANGES existing rows if it removed files OR
-            # attached deletion vectors (merge-on-read deletes/updates
-            # commit with remove=[] and dv set; a clone's first commit
-            # carries inherited DVs the same way) — both shapes an
-            # append stream cannot represent
-            if c.remove or c.dv:
-                if self.skip_change:
-                    return []
-                if not self.ignore_changes:
-                    raise ValueError(
-                        f"txtable stream: commit {version} at "
-                        f"{self.path} is a data CHANGE ({c.action}: "
-                        f"{len(c.remove)} file(s) removed, "
-                        f"{len(c.dv or {})} deletion vector(s)); an "
-                        "append stream cannot represent it — pass "
-                        "skipChangeCommits=true to skip such commits, "
-                        "or ignoreChanges=true to stream their added "
-                        "files (rewritten rows re-deliver; DV'd-out "
-                        "rows re-deliver undeleted)"
-                    )
-            if not self.clauses:
-                return list(c.add)
-            pm = tx._phys_map(self._schema_json)
-            pw = [
-                (tx._phys_clause_col(pm, col), op, v)
-                for col, op, v in self.clauses
-            ]
-            return [
-                f
-                for f in c.add
-                if all(
-                    tx._clause_may_match(
-                        (c.stats or {}).get(f), col, op, v
-                    )
-                    for col, op, v in pw
-                )
-            ]
-
-        def partitions(self, start: dict, end: dict):
-            s, e = int(start["version"]), int(end["version"])
-            self._hwm = max(self._hwm, s, e)
-            lo = max(s, self._floor)
-            self._floor = max(self._floor, lo, e)
-            out = []
-            for v in range(lo + 1, e + 1):
-                for f in self._commit_adds(v):
-                    out.append(
-                        _FilePartition(
-                            self.path, f, None, self._schema_json,
-                            self.clauses,
-                        )
-                    )
-            if not out:
-                # the API requires >= 1 partition; the empty sentinel
-                # reads nothing
-                out.append(
-                    _FilePartition(self.path, "", None, self._schema_json)
-                )
-            return out
-
-        def read(self, partition: _FilePartition) -> Iterator:
-            return _read_file_partition(partition)
-
-        def commit(self, end: dict) -> None:
-            pass  # offsets are durable in the query checkpoint
+    def read(self, partition: _FilePartition) -> Iterator:
+        return _read_file_partition(partition)
 
 
 class TxTableDataSource(DataSource):
@@ -499,8 +430,6 @@ class TxTableDataSource(DataSource):
         return "txtable"
 
     def schema(self) -> str:
-        from event_streaming_toy_example_spark.operators import txtable as tx
-
         path = self.options.get("path")
         if not path:
             raise ValueError(
@@ -530,11 +459,6 @@ class TxTableDataSource(DataSource):
         return TxTableReader(dict(self.options), schema)
 
     def streamReader(self, schema: StructType):
-        if DataSourceStreamReader is None:  # pragma: no cover
-            raise NotImplementedError(
-                "pyspark.sql.datasource.DataSourceStreamReader "
-                "unavailable in this runtime"
-            )
         return TxTableStreamReader(dict(self.options))
 
     def streamWriter(self, schema: StructType, overwrite: bool):

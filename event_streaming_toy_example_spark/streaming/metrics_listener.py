@@ -2,8 +2,9 @@
 
 Replaces the reference's mutate-a-dataclass-from-the-pipeline pattern
 (``mock_cloudwatch.py``) with a ``StreamingQueryListener`` that folds
-per-batch progress (rows in, dedup-dropped rows via state-operator
-metrics) into a ``PipelineMetrics`` and can append the Markdown report
+per-batch progress (rows in, minus the dedup operator's
+``numDroppedDuplicateRows`` and the rows dropped as late by the
+watermark) into a ``PipelineMetrics`` and can append the Markdown report
 each cycle — the reference's once-a-minute report cadence.
 """
 
@@ -29,14 +30,16 @@ class PipelineMetricsListener(StreamingQueryListener):
         p = event.progress
         self.metrics.lambda_invocations += 1
         rows_in = int(p.numInputRows or 0)
-        dropped = 0
+        duplicates = late = 0
         for op in p.stateOperators or []:
-            try:
-                dropped += int(op.numRowsDroppedByWatermark or 0)
-            except (TypeError, AttributeError):
-                pass
-        self.metrics.ingested_events += max(rows_in - dropped, 0)
-        self.metrics.duplicates_prevented += dropped
+            # the dedup operator's own counter; watermark drops are
+            # LATE rows, not duplicates
+            duplicates += int(
+                op.customMetrics.get("numDroppedDuplicateRows", 0)
+            )
+            late += int(op.numRowsDroppedByWatermark or 0)
+        self.metrics.ingested_events += max(rows_in - duplicates - late, 0)
+        self.metrics.duplicates_prevented += duplicates
         if self.report_path:
             append_markdown_report(self.metrics, self.report_path)
 

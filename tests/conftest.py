@@ -31,34 +31,17 @@ def sf_dir() -> str:
     return SF_DIR
 
 
-#: Modules whose FIRST test is too slow for the fast subset — the
-#: named test is marked instead (must be a cheap, representative one).
-_FAST_OVERRIDES: dict[str, str] = {}
-
-#: Extra tests included in the fast subset beyond the one-per-module
-#: default, as (module_basename, test_name_prefix).
-_FAST_EXTRAS: set[tuple[str, str]] = set()
-
-
 def pytest_collection_modifyitems(config, items):
     """Mark a driver-facing FAST subset (VERDICT r12 item 7): the full
     suite is ~1.5 h, which exceeds the driver's pytest budget, so
     ``-m fast`` selects one representative test per module (= per
-    operator family) — the first collected test by default, or the
-    ``_FAST_OVERRIDES`` entry where the first is slow.  Target: <10 min
+    operator family) — the first collected test.  Target: <10 min
     wall on the 32-core box."""
     import os.path
 
     first_seen: set[str] = set()
     for item in items:
         mod = os.path.basename(item.location[0])
-        name = item.name.split("[")[0]
-        override = _FAST_OVERRIDES.get(mod)
-        if override is not None:
-            if name == override:
-                item.add_marker(pytest.mark.fast)
-        elif mod not in first_seen:
+        if mod not in first_seen:
             first_seen.add(mod)
-            item.add_marker(pytest.mark.fast)
-        if (mod, name) in _FAST_EXTRAS:
             item.add_marker(pytest.mark.fast)

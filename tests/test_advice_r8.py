@@ -9,7 +9,7 @@ test group, in severity order):
    files load minus any DV the commit attaches (restore re-adding a
    holed file); a restore that CLEARS a DV emits the resurrected rows
    as inserts.
-2. (medium) the partitioned feed reader's first ``latestOffset()``
+2. (medium) the feed reader's first ``latestOffset()``
    after a restart capped from ``start_version`` and could return an
    offset BELOW the checkpointed one; a second restart from that
    regressed offset re-delivered versions.  Fix: until the engine
@@ -162,7 +162,7 @@ def test_dist_feed_restart_cap_bases_on_the_recovery_replan(
     computes, so the capped offset can never regress below one the
     engine recorded."""
     from event_streaming_toy_example_spark.sources.txfeed import (
-        TxFeedPartitionedStreamReader,
+        TxFeedStreamReader,
     )
 
     p = _mk_table(spark, tmp_path, versions=6)
@@ -171,7 +171,7 @@ def test_dist_feed_restart_cap_bases_on_the_recovery_replan(
         "maxversionsperbatch": "2",
     }
     # restarted instance, checkpointed offset 5: recovery re-plan first
-    restarted = TxFeedPartitionedStreamReader(dict(opts))
+    restarted = TxFeedStreamReader(dict(opts))
     assert restarted.partitions({"version": 5}, {"version": 5}) == []
     # capped latestOffset now bases on 5, never below it
     assert restarted.latestOffset() == {"version": 6}
@@ -180,19 +180,19 @@ def test_dist_feed_restart_cap_bases_on_the_recovery_replan(
     assert restarted.latestOffset() == {"version": 8}  # min(8, 6+2)
     # an uncommitted-batch restart re-plans (4, 6]: delivered once,
     # floor advances, a re-plan of the same range is empty
-    restarted2 = TxFeedPartitionedStreamReader(dict(opts))
+    restarted2 = TxFeedStreamReader(dict(opts))
     parts = restarted2.partitions({"version": 4}, {"version": 6})
     assert [q.version for q in parts] == [5, 6]
     assert restarted2.partitions({"version": 4}, {"version": 6}) == []
     # fresh query: latestOffset arrives BEFORE initialOffset (the
     # engine's actual order) and must still self-cap from the start
-    fresh = TxFeedPartitionedStreamReader(dict(opts))
+    fresh = TxFeedStreamReader(dict(opts))
     assert fresh.latestOffset() == {"version": 2}
     assert fresh.initialOffset() == {"version": 0}
 
 
 def test_dist_feed_double_restart_never_redelivers_e2e(spark, tmp_path):
-    """ADVICE r7 resolution, end-to-end: a capped distributed feed is
+    """ADVICE r7 resolution, end-to-end: a capped change feed is
     run, RESTARTED on the same checkpoint after new commits (twice),
     and every version must be delivered exactly once across all three
     query incarnations — the redelivery scenario the finding feared is
@@ -208,7 +208,7 @@ def test_dist_feed_double_restart_never_redelivers_e2e(spark, tmp_path):
 
     def run():
         q = (
-            txfeed.read_change_feed_stream_dist(
+            txfeed.read_change_feed_stream(
                 spark, p, ["k"], ["v"], max_versions_per_batch=2
             )
             .writeStream.foreachBatch(sink)

@@ -1,47 +1,50 @@
-"""Small-file compaction: bin-packing, clustering preservation,
-selective (no-rewrite-amplification) mode, and content invariance."""
+"""Small-file compaction on the table log (``txtable.tx_compact``):
+bin-packing, target-size control, clustering preservation, selective
+(no-rewrite-amplification) mode, and the content-invariance relation
+the ``layout_compact_invariance`` catalog entry emits."""
 
 from __future__ import annotations
 
-import glob
 import os
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from event_streaming_toy_example_spark.operators.compaction import (
-    compact_files,
-    compaction_invariance,
-    list_data_files,
+from event_streaming_toy_example_spark.operators import txtable as tx
+from event_streaming_toy_example_spark.plans.queries_ext18 import (
+    _compaction_invariance,
 )
 
 
 def _fragmented_table(spark, path: str, n_files: int = 32, rows: int = 4000):
-    (
+    tx.tx_append(
         spark.range(rows)
         .select(
             F.col("id"),
             (F.col("id") % 7).alias("k"),
             (F.col("id") * 3).alias("v"),
         )
-        .repartition(n_files)
-        .write.mode("overwrite")
-        .parquet(path)
+        .repartition(n_files),
+        path,
     )
+
+
+def _sizes(path: str) -> dict[str, int]:
+    return {
+        f: os.path.getsize(os.path.join(path, f))
+        for f in tx.snapshot(path).files
+    }
 
 
 def test_full_compaction_packs_and_preserves_rows(spark, tmp_path):
     path = str(tmp_path / "tbl")
     _fragmented_table(spark, path)
-    before = spark.read.parquet(path)
-    sum_before = before.agg(F.sum("v")).collect()[0][0]
-    n_files_before = len(list_data_files(spark, path))
-    assert n_files_before >= 30
+    sum_before = tx.read_table(spark, path).agg(F.sum("v")).collect()[0][0]
+    assert len(tx.snapshot(path).files) >= 30
 
-    res = compact_files(spark, path, target_bytes=1 << 30)
-    assert res.files_before == n_files_before
-    assert res.files_after == 1  # everything fits one target-size file
-    after = spark.read.parquet(path)
+    assert tx.tx_compact(spark, path, target_bytes=1 << 30) is not None
+    assert len(tx.snapshot(path).files) == 1  # everything fits one file
+    after = tx.read_table(spark, path)
     assert after.count() == 4000
     assert after.agg(F.sum("v")).collect()[0][0] == sum_before
 
@@ -49,32 +52,31 @@ def test_full_compaction_packs_and_preserves_rows(spark, tmp_path):
 def test_target_size_controls_output_count(spark, tmp_path):
     path = str(tmp_path / "tbl")
     _fragmented_table(spark, path)
-    total = sum(s for _, s in list_data_files(spark, path))
-    target = total // 4 + 1
-    res = compact_files(spark, path, target_bytes=target)
+    total = sum(_sizes(path).values())
+    tx.tx_compact(spark, path, target_bytes=total // 4 + 1)
     # ceil(total/target) = 4 packed files
-    assert res.files_after == 4
+    assert len(tx.snapshot(path).files) == 4
 
 
 def test_order_col_preserves_clustering(spark, tmp_path):
-    """Compacting a sorted/Z-ordered table with ``order_col`` must keep
-    per-file key ranges disjoint so footer-stat pruning stays
-    selective (a round-robin repack would destroy it)."""
+    """Compacting with ``order_col`` must keep per-file key ranges
+    disjoint so footer-stat pruning stays selective (a round-robin
+    repack would destroy it)."""
     path = str(tmp_path / "tbl")
     _fragmented_table(spark, path, n_files=32, rows=8000)
-    total = sum(s for _, s in list_data_files(spark, path))
-    compact_files(spark, path, target_bytes=total // 4 + 1, order_col="id")
+    total = sum(_sizes(path).values())
+    tx.tx_compact(spark, path, target_bytes=total // 4 + 1, order_col="id")
     ranges = []
-    for f in sorted(glob.glob(f"{path}/*.parquet")):
-        meta = pq.ParquetFile(f).metadata
-        mins, maxs = [], []
-        for rg in range(meta.num_row_groups):
-            for ci in range(meta.row_group(rg).num_columns):
-                c = meta.row_group(rg).column(ci)
-                if c.path_in_schema == "id" and c.statistics is not None:
-                    mins.append(c.statistics.min)
-                    maxs.append(c.statistics.max)
-        ranges.append((min(mins), max(maxs)))
+    for f in tx.snapshot(path).files:
+        meta = pq.ParquetFile(os.path.join(path, f)).metadata
+        col = meta.schema.names.index("id")
+        stats = [
+            meta.row_group(rg).column(col).statistics
+            for rg in range(meta.num_row_groups)
+        ]
+        ranges.append(
+            (min(s.min for s in stats), max(s.max for s in stats))
+        )
     ranges.sort()
     assert len(ranges) == 4
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
@@ -85,53 +87,54 @@ def test_selective_mode_leaves_big_files_alone(spark, tmp_path):
     """Only files below the threshold are rewritten — the property that
     makes continuous compaction affordable at scale."""
     path = str(tmp_path / "tbl")
-    # one big file + many small ones
-    spark.range(200_000).select(
-        F.col("id"), (F.col("id") * 3).alias("v"), (F.col("id") % 7).alias("k")
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-    big = [p for p, s in list_data_files(spark, path)]
-    assert len(big) == 1
-    spark.range(200_000, 204_000).select(
-        F.col("id"), (F.col("id") * 3).alias("v"), (F.col("id") % 7).alias("k")
-    ).repartition(16).write.mode("append").parquet(path)
-    files = list_data_files(spark, path)
-    assert len(files) == 17
-    big_size = max(s for _, s in files)
-
-    res = compact_files(
-        spark, path, target_bytes=1 << 30, small_file_bytes=big_size
+    cols = [
+        F.col("id"),
+        (F.col("id") * 3).alias("v"),
+        (F.col("id") % 7).alias("k"),
+    ]
+    tx.tx_append(spark.range(200_000).select(*cols).coalesce(1), path)
+    (big,) = tx.snapshot(path).files
+    tx.tx_append(
+        spark.range(200_000, 204_000).select(*cols).repartition(16), path
     )
-    assert res.files_before == 17
-    assert res.files_after == 2  # untouched big file + one packed file
-    # the big file's path survived verbatim (no rewrite amplification)
-    assert any(os.path.basename(big[0]) == os.path.basename(p)
-               for p, _ in list_data_files(spark, path))
-    assert res.rows == 4000  # only the small files' rows were rewritten
-    assert spark.read.parquet(path).count() == 204_000
+    sizes = _sizes(path)
+    assert len(sizes) == 17
+
+    tx.tx_compact(
+        spark,
+        path,
+        target_bytes=1 << 30,
+        small_file_bytes=max(sizes.values()),
+    )
+    files = tx.snapshot(path).files
+    assert len(files) == 2  # untouched big file + one packed file
+    assert big in files  # no rewrite amplification
+    assert tx.read_table(spark, path).count() == 204_000
 
 
 def test_noop_when_nothing_to_pack(spark, tmp_path):
     path = str(tmp_path / "tbl")
-    spark.range(100).coalesce(1).write.mode("overwrite").parquet(path)
-    files = list_data_files(spark, path)
-    res = compact_files(spark, path, target_bytes=1 << 30)
-    assert (res.files_before, res.files_after, res.rows) == (1, 1, 0)
-    assert list_data_files(spark, path) == files  # untouched
+    tx.tx_append(spark.range(100).coalesce(1), path)
+    files, version = tx.snapshot(path).files, tx.table_version(path)
+    assert tx.tx_compact(spark, path, target_bytes=1 << 30) is None
+    assert tx.snapshot(path).files == files  # untouched
+    assert tx.table_version(path) == version  # nothing committed
 
 
 def test_invariance_relation_shape(spark, tmp_path):
     path = str(tmp_path / "tbl")
     _fragmented_table(spark, path)
-    before = spark.read.parquet(path).select("k", "v").cache()
-    before.count()  # pin BEFORE content: the path is compacted in place
-    compact_files(spark, path, target_bytes=1 << 30)
-    inv = compaction_invariance(
-        before, spark.read.parquet(path), key_col="k", value_col="v"
+    v_before = tx.table_version(path)
+    tx.tx_compact(spark, path, target_bytes=1 << 30)
+    inv = _compaction_invariance(
+        tx.read_table(spark, path, v_before).select("k", "v"),
+        tx.read_table(spark, path),
+        key_col="k",
+        value_col="v",
     )
     rows = inv.collect()
     assert len(rows) == 7
     assert all(r["invariant_ok"] == 1 for r in rows)
-    before.unpersist()
 
 
 def test_measured_scan_cost_drops(spark, tmp_path):
@@ -139,10 +142,8 @@ def test_measured_scan_cost_drops(spark, tmp_path):
     splits.  Measure the scan's partition count before/after."""
     path = str(tmp_path / "tbl")
     _fragmented_table(spark, path, n_files=64, rows=20_000)
-    n_splits_before = (
-        spark.read.parquet(path).rdd.getNumPartitions()
-    )
-    compact_files(spark, path, target_bytes=1 << 30)
-    n_splits_after = spark.read.parquet(path).rdd.getNumPartitions()
-    assert n_splits_after < n_splits_before
-    assert spark.read.parquet(path).count() == 20_000
+    n_splits_before = tx.read_table(spark, path).rdd.getNumPartitions()
+    tx.tx_compact(spark, path, target_bytes=1 << 30)
+    after = tx.read_table(spark, path)
+    assert after.rdd.getNumPartitions() < n_splits_before
+    assert after.count() == 20_000

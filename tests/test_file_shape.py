@@ -110,7 +110,8 @@ def test_snapshot_reads_stay_off_the_distributed_listing_job(spark):
     """Plan-construction cost pin: explicit-file-list reads must use
     driver-side listing up to thousands of paths (the A/B measured the
     one-task-per-path listing job at 0.9 s for 340 paths / 7.6 s for
-    3400, vs 166/728 ms driver-side — tools/follower_ab_probe.py)."""
+    3400, vs 166/728 ms driver-side — docs/PLANS.md, "The follower
+    regression, closed")."""
     thr = int(
         spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
     )

@@ -190,6 +190,48 @@ def test_stream_metrics_listener(spark, tmp_path):
         spark.streams.removeListener(listener)
 
 
+def test_stream_metrics_listener_counts_injected_duplicates(spark, tmp_path):
+    """``duplicates_prevented`` is the dedup operator's dropped-duplicate
+    count, exactly: a single-batch input with a known number of injected
+    duplicates and no late rows books that number, and every original
+    event as ingested."""
+    import time
+
+    from event_streaming_toy_example_spark.streaming.metrics_listener import (
+        PipelineMetricsListener,
+    )
+
+    events = generate_events(spark, 120, seed=41)
+    feed = inject_duplicates(events, rate=0.2, seed=41)
+    n_events, n_dups = events.count(), feed.count() - events.count()
+    assert n_dups > 0
+    src = str(tmp_path / "in")
+    wrap_kinesis_envelope(feed).coalesce(1).write.mode("overwrite").text(src)
+    listener = PipelineMetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        stream = spark.readStream.schema("record string").text(src).withColumnRenamed(
+            "value", "record"
+        )
+        q = start_ingest_stream(
+            stream,
+            str(tmp_path / "stage"),
+            str(tmp_path / "ck"),
+            watermark="365 days",
+            available_now=True,
+        )
+        q.awaitTermination(120)
+        n_progress = len(q.recentProgress)
+        for _ in range(40):  # listener is async; poll briefly
+            if listener.metrics.lambda_invocations >= n_progress:
+                break
+            time.sleep(0.25)
+        assert listener.metrics.duplicates_prevented == n_dups
+        assert listener.metrics.ingested_events == n_events
+    finally:
+        spark.streams.removeListener(listener)
+
+
 def test_kafka_shaped_source_contract(spark, tmp_path):
     """The same decode -> dedup -> enrich chain must run unchanged on a
     source carrying Kafka's exact schema (key/value binary + topic/
@@ -346,55 +388,65 @@ def test_running_user_stats_gate_or_run(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_upsert_sink_replay_and_checkpoint_idempotence(spark, tmp_path):
-    """The streaming MERGE sink must (a) equal the batch latest-per-key
-    result, (b) be a no-op when re-run over the same checkpoint, and
-    (c) reproduce identical state from a fresh checkpoint (replay
-    determinism)."""
-    from pyspark.sql import functions as F
-
+def _upsert_changes(spark, tag):
     from event_streaming_toy_example_spark.plans.queries_ext import (
         stage_stream_input,
     )
     from event_streaming_toy_example_spark.schemas import load_table
-    from event_streaming_toy_example_spark.streaming.upsert_sink import (
-        read_state,
-        start_upsert_stream,
-    )
     from tests.conftest import SF_DIR
 
     ev = load_table(spark, SF_DIR, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    in_path = stage_stream_input(ev, "upsink_test", SF_DIR)
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string"
+    in_path = stage_stream_input(ev, tag, SF_DIR)
+    changes = (
+        spark.readStream.schema(
+            "event_id bigint, ts timestamp, user_id bigint, event_type string"
+        )
+        .option("maxFilesPerTrigger", 4)
+        .parquet(in_path)
     )
+    return ev, changes
 
-    def run(state, ckpt):
-        changes = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 4)
-            .parquet(in_path)
-        )
-        q = start_upsert_stream(
-            changes,
-            state_dir=str(state),
-            checkpoint_dir=str(ckpt),
-            keys=["user_id"],
-            order_by=["ts", "event_id"],
-        )
-        q.awaitTermination(300)
+
+def _run_upsert_stream(ev, changes, table, ckpt):
+    from event_streaming_toy_example_spark.operators import txtable as tx
+
+    if tx.table_version(table) == 0:
+        tx.tx_append(ev.limit(0), table)  # explicit create, empty v1
+    q = tx.tx_upsert_stream(
+        changes,
+        table,
+        ckpt,
+        keys=["user_id"],
+        order_by=["ts", "event_id"],
+        app_id="upsink_test",
+    )
+    assert q.awaitTermination(300)
+
+
+def test_upsert_sink_replay_and_checkpoint_idempotence(spark, tmp_path):
+    """The streaming MERGE sink (``txtable.tx_upsert_stream``) must (a)
+    equal the batch latest-per-key result, (b) be a no-op when re-run
+    over the same checkpoint, and (c) reproduce identical state from a
+    fresh checkpoint (replay determinism)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from event_streaming_toy_example_spark.operators import txtable as tx
+
+    ev, changes = _upsert_changes(spark, "upsink_test")
+
+    def run(table, ckpt):
+        _run_upsert_stream(ev, changes, str(table), str(ckpt))
         return sorted(
             tuple(r)
-            for r in read_state(spark, str(state))
+            for r in tx.read_table(spark, str(table))
             .select("user_id", "event_id")
             .collect()
         )
 
     got = run(tmp_path / "s1", tmp_path / "c1")
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
@@ -405,91 +457,37 @@ def test_upsert_sink_replay_and_checkpoint_idempotence(spark, tmp_path):
         .collect()
     )
     assert got == want
-    # (b) same checkpoint: no new batches, state unchanged
+    # (b) same checkpoint: no new commits, state unchanged
+    v = tx.table_version(str(tmp_path / "s1"))
     assert run(tmp_path / "s1", tmp_path / "c1") == got
-    # (c) fresh checkpoint + fresh state: deterministic replay
+    assert tx.table_version(str(tmp_path / "s1")) == v
+    # (c) fresh checkpoint + fresh table: deterministic replay
     assert run(tmp_path / "s2", tmp_path / "c2") == got
 
 
 def test_upsert_sink_time_travel_versions(spark, tmp_path):
-    """Retained generations are readable via read_state(version=...):
-    the retention window holds, version -1 equals current, earlier
-    versions are prefixes of the key history (latest-per-key row
-    counts never shrink as batches accumulate), and versions outside
-    the window raise."""
+    """Every micro-batch commit stays readable by version: the newest
+    version equals the current read, earlier versions are prefixes of
+    the key history (latest-per-key row counts never shrink as batches
+    accumulate), and a version beyond the log raises."""
     import pytest
-    from pyspark.sql import functions as F
 
-    from event_streaming_toy_example_spark.plans.queries_ext import (
-        stage_stream_input,
-    )
-    from event_streaming_toy_example_spark.schemas import load_table
-    from event_streaming_toy_example_spark.streaming.upsert_sink import (
-        list_versions,
-        read_state,
-        start_upsert_stream,
-    )
-    from tests.conftest import SF_DIR
+    from event_streaming_toy_example_spark.operators import txtable as tx
 
-    ev = load_table(spark, SF_DIR, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    in_path = stage_stream_input(ev, "upsink_tt", SF_DIR)
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string"
-    )
-    changes = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(in_path)
-    )
-    state = tmp_path / "s"
-    q = start_upsert_stream(
-        changes,
-        state_dir=str(state),
-        checkpoint_dir=str(tmp_path / "c"),
-        keys=["user_id"],
-        order_by=["ts", "event_id"],
-        keep_generations=3,
-    )
-    assert q.awaitTermination(300)
-    versions = list_versions(str(state))
-    assert 1 <= len(versions) <= 3
-    current = sorted(
-        tuple(r) for r in read_state(spark, str(state)).collect()
-    )
-    assert (
-        sorted(tuple(r) for r in read_state(spark, str(state), -1).collect())
-        == current
-    )
+    ev, changes = _upsert_changes(spark, "upsink_tt")
+    table = str(tmp_path / "s")
+    _run_upsert_stream(ev, changes, table, str(tmp_path / "c"))
+    current = tx.table_version(table)
+    assert current >= 2  # the create + at least one micro-batch
+    assert sorted(
+        tuple(r) for r in tx.read_table(spark, table, current).collect()
+    ) == sorted(tuple(r) for r in tx.read_table(spark, table).collect())
     counts = [
-        read_state(spark, str(state), i).count()
-        for i in range(len(versions))
+        tx.read_table(spark, table, v).count() for v in range(1, current + 1)
     ]
     assert counts == sorted(counts)  # latest-per-key never shrinks
-    with pytest.raises(IndexError, match="outside the retained window"):
-        read_state(spark, str(state), -(len(versions) + 1))
-
-
-def test_upsert_sink_rejects_zero_retention(spark, tmp_path):
-    import pytest
-
-    from event_streaming_toy_example_spark.streaming.upsert_sink import (
-        start_upsert_stream,
-    )
-
-    # validation fires before any stream machinery, so a batch frame
-    # stands in for the changes stream
-    changes = spark.range(1)
-    with pytest.raises(ValueError, match="keep_generations"):
-        start_upsert_stream(
-            changes,
-            state_dir=str(tmp_path / "s"),
-            checkpoint_dir=str(tmp_path / "c"),
-            keys=["user_id"],
-            order_by=["ts"],
-            keep_generations=0,
-        )
+    with pytest.raises(IndexError, match="outside committed range"):
+        tx.read_table(spark, table, current + 1)
 
 
 def test_running_user_stats_multibatch_state_carries(spark, tmp_path):

@@ -1507,3 +1507,23 @@ def test_distributed_vacuum_bounds_driver_list_calls(spark, tmp_path):
         assert lists[0][0] == "list", lists
     finally:
         unregister_object_store(p)
+
+
+def test_fold_memo_hit_is_read_only(spark, tmp_path):
+    """Every caller shares the memoized fold, so an in-place write to a
+    hit must raise and leave the next read unchanged (ADVICE r13)."""
+    p = str(tmp_path / "t")
+    tx.tx_append(_df(spark, [(1, 1, "a")]), p)
+    first = tx._fold_state(p)
+    hit = tx._fold_state(p)
+    assert hit is first  # a memo hit, not a fresh fold
+    files = dict(hit.files)
+    for name in ("files", "dvs", "properties", "stream_txns", "protocol"):
+        with pytest.raises(TypeError):
+            getattr(hit, name)["injected"] = None
+    with pytest.raises(AttributeError):
+        hit.files.pop(next(iter(files)))
+    again = tx._fold_state(p)
+    assert dict(again.files) == files
+    assert "injected" not in again.properties
+    assert _content(spark, p) == [(1, 1, "a")]
